@@ -641,9 +641,11 @@ object Bench {
     // characters, which used to leave nothing but the spread map
     // visible — per-query SPREADS were then read as per-query TIMES
     // (a 0.03 "time" for a 10 s k-means query). Two defenses: the
-    // full JSON also goes to bench_full.json next to the run, and the
-    // tail end of the line carries a queries_slowest map with the
-    // real timings that matter for regression reading.
+    // full JSON also goes to bench_full_c<cpus>.json next to the run
+    // (one file per core count, so an 8-core run never overwrites the
+    // 32-core map), and the tail end of the line carries a
+    // queries_slowest map with the real timings that matter for
+    // regression reading.
     val slowest = timings.toSeq.sortBy(-_._2).take(12)
       .map { case (k, v) => s"${jq(k)}:${f"$v%.3f"}" }.mkString("{", ",", "}")
     val total = ingestSec + timings.values.sum
@@ -659,8 +661,9 @@ object Bench {
       skewCheck.map(sc => s""""skew_check":$sc,""").getOrElse("") +
       indexCheck.map(ic => s""""index_check":$ic,""").getOrElse("") +
       s""""sf":${jq(sfDir)}}"""
+    val fullFile = s"bench_full_c$cpus.json"
     try java.nio.file.Files.write(
-      java.nio.file.Paths.get("bench_full.json"),
+      java.nio.file.Paths.get(fullFile),
       line.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch { case _: Throwable => () } // reporting must never fail the bench
     println(line)
@@ -671,22 +674,27 @@ object Bench {
     // null — the optimization rounds never got machine-readable
     // per-query data. The full line (every query, every field — the
     // unchanged measurement contract) still prints above and lands in
-    // bench_full.json; this FINAL line is a <= ~1900-char digest of the
-    // same run — totals, errors, the 12 slowest queries (the only ones
-    // above the sandbox noise floor), the index/scale/skew blocks and
-    // the determinism anchors — so the tail always contains one
-    // complete, parseable JSON object. Optional blocks drop in noise-
-    // tolerance order if an unusually long errors map would overflow.
+    // bench_full_c<cpus>.json; this FINAL line is a <= ~1900-char digest
+    // of the same run — totals, the error count plus the first error
+    // (each entry is capped at 200 chars; the full map is in the file),
+    // the 12 slowest queries (the only ones above the sandbox noise
+    // floor), the index/scale/skew blocks and the determinism anchors —
+    // so the tail always contains one complete, parseable JSON object.
+    // Optional blocks drop in noise-tolerance order if they would
+    // overflow.
     val digestParts = List(
       skewCheck.map(sc => s""""skew_check":$sc"""),
       scaleCheck.map(sc => s""""scale_check":$sc"""),
       // index_check can carry the (opt-in) deep-scale fields: too long
       // for the digest, so cap it rather than drop the whole block
       indexCheck.filter(_.length <= 400).map(ic => s""""index_check":$ic"""))
+    val firstError = errors.headOption
+      .map { case (k, v) => s"{${jq(k)}:${jq(v)}}" }.getOrElse("{}")
     val digestHead =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$slowest,""" +
-      s""""queries_all_in":"bench_full.json","n_queries":${timings.size},""" +
-      s""""errors":$es,"ingest_sec":${f"$ingestSec%.4f"},""" +
+      s""""queries_all_in":${jq(fullFile)},"n_queries":${timings.size},""" +
+      s""""n_errors":${errors.size},"errors":$firstError,""" +
+      s""""ingest_sec":${f"$ingestSec%.4f"},""" +
       s""""ingest_rows_per_sec":${rowsPerSec.toLong},""" +
       s""""raw_rows":$rawRows,"summary_windows":$windowRows,""" +
       s""""compression_ratio":${f"$compression%.6f"},""" +

@@ -232,7 +232,9 @@ final class QSketch(k0: Int) extends Serializable with KryoSerializable {
   private[functions] def loadLevel(w: Long, flip: Boolean, vs: Array[Double], cnt: Int): Unit = {
     if (w == 1L) {
       if (cnt > 0) {
-        l1 = if (cnt > _k) vs else java.util.Arrays.copyOf(vs, _k + 1)
+        // one spare slot past the stored values: add() writes before it
+        // compacts, so an oversized stored level still takes a value
+        l1 = java.util.Arrays.copyOf(vs, math.max(cnt, _k) + 1)
         l1n = cnt
       }
       // empty stored weight-1 entries are dropped on read, matching the

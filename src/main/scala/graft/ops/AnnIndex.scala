@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.{IndexState, TinyParquet}
+
 /** Persisted IVF index — build once, query many times.
   *
   * [[Clustering.ivfTopK]] re-trains the coarse quantizer on every
@@ -93,16 +95,10 @@ object AnnIndex {
   def stats(spark: SparkSession, dir: String): IndexStats = {
     val fs = fsFor(spark, dir)
     checkLayout(fs, dir)
-    def cellFiles(rootStr: String): Seq[Long] = {
-      val root = new org.apache.hadoop.fs.Path(rootStr)
-      if (!fs.exists(root)) Nil
-      else fs.listStatus(root)
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("cell="))
-        .map(cd => fs.listStatus(cd.getPath).count { st =>
-          st.isFile && !st.getPath.getName.startsWith("_") &&
-            !st.getPath.getName.startsWith(".")
-        }.toLong).toSeq
-    }
+    def cellFiles(rootStr: String): Seq[Long] =
+      IndexState.partitionDirs(spark, new org.apache.hadoop.fs.Path(rootStr), "cell=")
+        .map(cd => TinyParquet.dataFiles(spark.sparkContext.hadoopConfiguration,
+          cd.toString).length.toLong)
     val vec = cellFiles(vectorsPath(dir))
     val pq = cellFiles(pqcodesPath(dir))
     val rows = spark.read.parquet(vectorsPath(dir)).count()
@@ -115,7 +111,7 @@ object AnnIndex {
       rows = rows,
       dataFiles = vec.sum,
       pqFiles = pq.sum,
-      tombstones = readTombstones(spark, dir).fold(0L)(_.count()),
+      tombstones = state(dir).tombstoneCount(spark),
       hasPqSidecar = fs.exists(new org.apache.hadoop.fs.Path(codebooksPath(dir))),
       builtRows = builtRows,
       appendedFraction =
@@ -191,19 +187,13 @@ object AnnIndex {
     }
   }
 
-  /** Single-writer lock (see [[graft.sources.WriterLock]]) on
-    * `<dir>/_writer.lock`: compact racing an append would silently
-    * drop files installed into a cell between compact's read and its
-    * directory swap; build/buildPq racing anything tears the
-    * centers/vectors (or codebooks/pqcodes) consistency. Probes never
-    * lock — each mutation is reader-atomic on its own.
+  /** The index's shared lifecycle state (writer lock, tombstones keyed
+    * by `vec_id`, stream commits — [[IndexState]]). Besides the compact
+    * race every index has, the lock keeps build/buildPq from tearing
+    * the centers/vectors (or codebooks/pqcodes) consistency.
     */
-  private[graft] def withWriterLock[T](spark: SparkSession, dir: String)(body: => T): T = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.sources.WriterLock.withLock(
-      fs, graft.sources.WriterLock.lockPath(dir), s"AnnIndex $dir")(body)
-  }
+  private[graft] def state(dir: String): IndexState =
+    IndexState(dir, s"AnnIndex $dir", IndexState.longKey("vec_id"))
 
   /** Train + assign + write the index under `dir`. Returns the cell
     * count. `nClusters <= 0` = auto ~sqrt(N) (pass `nTotal` to skip
@@ -219,7 +209,7 @@ object AnnIndex {
       nTotal: Long = 0L,
       metaCols: Seq[String] = Nil): Int = {
     val spark = embs.sparkSession
-    withWriterLock(spark, dir) {
+    state(dir).withWriterLock(spark) {
     import spark.implicits._
     val reserved = Set("vec_id", "v", "cell")
     require(metaCols.forall(c => !reserved(c) && c != idCol && c != vecCol),
@@ -305,17 +295,9 @@ object AnnIndex {
       new org.apache.hadoop.fs.Path(s"$dir/_build_tmp/ivf"),
       new org.apache.hadoop.fs.Path(s"$dir/ivf"),
       new org.apache.hadoop.fs.Path(s"$dir/_build_old"))
-    // 3. Generation state, cleared conservative-late: a rebuild starts
-    //    with every given vector live, so the previous generation's
-    //    tombstones must not hide rows of this one — between steps 2
-    //    and 3 a probe can transiently HIDE a new row whose id matches
-    //    an old tombstone, never resurrect a takedown. Stream markers
-    //    are generation state too: a fresh stream restarts batchIds at
-    //    0, and a stale marker would silently skip its first batches.
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/tombstones"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/_stream_commits"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/_stream_staging"), true)
-    fs.delete(staging, true)
+    // 3. Generation state (tombstones, stream markers), cleared
+    //    conservative-late — see [[IndexState.resetGeneration]].
+    state(dir).resetGeneration(spark, staging.toString)
     // Migration sweep: an index from the flat pre-ivf/pq layout leaves
     // its old root-level directories behind — orphaned storage readers
     // no longer see. A rebuild IS the migration; remove them.
@@ -338,7 +320,7 @@ object AnnIndex {
       dir: String,
       embs: DataFrame,
       idCol: String = "vec_id",
-      vecCol: String = "embedding"): Unit = withWriterLock(spark, dir) {
+      vecCol: String = "embedding"): Unit = state(dir).withWriterLock(spark) {
     import spark.implicits._
     checkLayout(fsFor(spark, dir), dir)
     val books = readCodebooks(spark, dir)
@@ -384,10 +366,10 @@ object AnnIndex {
     * number of vectors merged in.
     */
   def merge(spark: SparkSession, dir: String, otherDir: String): Long =
-    withWriterLock(spark, dir) {
+    state(dir).withWriterLock(spark) {
       checkLayout(fsFor(spark, otherDir), otherDir)
-      val other = minusTombstones(spark, otherDir,
-        spark.read.parquet(vectorsPath(otherDir)), on = "vec_id")
+      val other = state(otherDir).minusTombstones(spark,
+        spark.read.parquet(vectorsPath(otherDir)))
         .drop("cell")
         .withColumnRenamed("v", "embedding")
         .localCheckpoint() // one evaluation feeds the count and the append
@@ -424,48 +406,12 @@ object AnnIndex {
       spark: SparkSession,
       dir: String,
       ids: DataFrame,
-      idCol: String = "vec_id"): Long = withWriterLock(spark, dir) {
+      idCol: String = "vec_id"): Long = state(dir).withWriterLock(spark) {
     checkLayout(fsFor(spark, dir), dir)
-    val requested = ids.select(col(idCol).cast("long").as("vec_id")).distinct()
-      .localCheckpoint()
     // one semi scan of the index's id column — no shuffle of
-    // index-sized data. The ids frame is caller-supplied, so its
-    // broadcast rides the same guard as the query-batch hints.
-    val reqSide =
-      if (requested.count() * 56L <= Similarity.BroadcastGuardBytes) broadcast(requested)
-      else requested
-    val present = spark.read.parquet(vectorsPath(dir)).select("vec_id")
-      .join(reqSide, Seq("vec_id"), "left_semi")
-      .distinct()
-    val doomed = readTombstones(spark, dir)
-      .fold(present)(t =>
-        present.join(Similarity.guardedRowBroadcast(t), Seq("vec_id"), "left_anti"))
-      .localCheckpoint()
-    val n = doomed.count()
-    if (n > 0)
-      doomed.write.mode("append").parquet(s"$dir/tombstones")
-    n
-  }
-
-  /** The live tombstoned vec_ids, if any — takedown-sized, so callers
-    * broadcast the anti-join (under the guard) and candidate scans
-    * keep their shape. Under the tininess guard the set is read
-    * DRIVER-SIDE into a LocalRelation (sorted distinct ids — no Spark
-    * job for the read, the distinct, or the broadcast-guard count, the
-    * probe path's fixed latency floor); past the guard it falls back to
-    * the Spark read with identical semantics.
-    */
-  private def readTombstones(spark: SparkSession, dir: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else graft.sources.TinyParquet.longsIfTiny(
-      spark.sparkContext.hadoopConfiguration, p.toString, "vec_id") match {
-      case Some(ids) =>
-        import spark.implicits._
-        Some(spark.createDataset(ids.distinct.sorted.toSeq).toDF("vec_id"))
-      case None => Some(spark.read.parquet(p.toString).select("vec_id").distinct())
-    }
+    // index-sized data
+    state(dir).takedown(spark,
+      spark.read.parquet(vectorsPath(dir)).select("vec_id"), ids, idCol, "vec_id")
   }
 
   /** The frozen center table, cell-ascending — a k-row driver-side
@@ -478,13 +424,6 @@ object AnnIndex {
       .map(g => (g.getInteger("cell", 0),
         graft.sources.TinyParquet.doubleArray(g, "center")))
       .sortBy(_._1).map(_._2).toArray
-
-  /** Exclude tombstoned vectors from a candidate frame keyed by `on`. */
-  private def minusTombstones(
-      spark: SparkSession, dir: String, df: DataFrame, on: String): DataFrame =
-    readTombstones(spark, dir).fold(df)(t =>
-      df.join(Similarity.guardedRowBroadcast(t.withColumnRenamed("vec_id", on)),
-        Seq(on), "left_anti"))
 
   /** The filterable metadata columns this index stores beside the
     * vectors — everything in `vectors/` that is not the id, the vector
@@ -560,7 +499,7 @@ object AnnIndex {
       spark: SparkSession,
       dir: String,
       targetBytes: Long = 128L << 20,
-      minFiles: Int = 2): Long = withWriterLock(spark, dir) {
+      minFiles: Int = 2): Long = state(dir).withWriterLock(spark) {
     require(targetBytes > 0 && minFiles >= 2, s"bad compact params: $targetBytes, $minFiles")
     checkLayout(fsFor(spark, dir), dir)
     val vectors = new org.apache.hadoop.fs.Path(vectorsPath(dir))
@@ -569,45 +508,21 @@ object AnnIndex {
     // With live tombstones both trees are always rewritten (the
     // minFiles shortcut is disabled): a tombstoned row may sit in ANY
     // cell, and physical retirement is the point of this compact.
-    val tomb = readTombstones(spark, dir).map(_.localCheckpoint())
+    val hide = state(dir).tombstoneFilter(spark)
     def dataFiles(p: org.apache.hadoop.fs.Path) =
-      fs.listStatus(p).filter { st =>
-        st.isFile && !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith(".")
-      }
-    def cellDirs(root: org.apache.hadoop.fs.Path) =
-      fs.listStatus(root)
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("cell="))
-    // Refuse to compact over an UNCOMMITTED streamed batch (a
-    // `b<id>.parquet` whose commit marker is absent — a crashed
-    // attempt pending redelivery): compacting would merge its rows
-    // into the coalesced files AND destroy the deterministic name the
-    // retry replaces, so the redelivery would install a second copy.
-    // The writer lock already excludes an IN-FLIGHT install; this
-    // guards the crashed-and-not-yet-retried window. Loud + retryable:
-    // let the stream recover the batch, then compact.
-    val batchFile = "b(\\d+)(?:-\\d+)?\\.parquet".r
-    def uncommitted(root: org.apache.hadoop.fs.Path): Seq[String] =
-      if (!fs.exists(root)) Nil
-      else cellDirs(root)
-        .flatMap(cd => dataFiles(cd.getPath))
-        .flatMap(st => batchFile.findFirstMatchIn(st.getPath.getName).map(_.group(1)))
-        .distinct.toSeq
-        .filterNot(id => fs.exists(
-          new org.apache.hadoop.fs.Path(s"$dir/_stream_commits/$id")))
-    val pending = (uncommitted(vectors) ++ uncommitted(pqcodes)).distinct
-    if (pending.nonEmpty)
-      throw new IllegalStateException(
-        s"compact: uncommitted streamed batch(es) ${pending.mkString(", ")} present " +
-          "— a crashed ingest attempt is pending redelivery; let the stream recover, then compact")
+      TinyParquet.dataFiles(spark.sparkContext.hadoopConfiguration, p.toString)
+    def cellDirs(root: org.apache.hadoop.fs.Path) = IndexState.partitionDirs(spark, root, "cell=")
+    // A crashed streamed attempt pending redelivery blocks the rewrite.
+    state(dir).requireStreamCommitted(spark, cellDirs(vectors) ++ cellDirs(pqcodes))
     val trees = Seq(vectors) ++ (if (fs.exists(pqcodes)) Seq(pqcodes) else Nil)
     def countTree(root: org.apache.hadoop.fs.Path): Long =
-      cellDirs(root).map(cd => dataFiles(cd.getPath).length.toLong).sum
+      cellDirs(root).map(cd => dataFiles(cd).length.toLong).sum
     def fragmentedCells(root: org.apache.hadoop.fs.Path): Array[Int] =
       cellDirs(root)
-        .filter(cd => dataFiles(cd.getPath).length >= minFiles)
-        .map(cd => cd.getPath.getName.stripPrefix("cell=").toInt)
-        .sorted
-    if (tomb.isEmpty && trees.forall(fragmentedCells(_).isEmpty)) trees.map(countTree).sum
+        .filter(cd => dataFiles(cd).length >= minFiles)
+        .map(cd => cd.getName.stripPrefix("cell=").toInt)
+        .toArray.sorted
+    if (hide.isEmpty && trees.forall(fragmentedCells(_).isEmpty)) trees.map(countTree).sum
     else {
       // One Spark job per tree, however many cells: read, retire
       // tombstones, rewrite, swap. With live tombstones the WHOLE tree
@@ -625,18 +540,18 @@ object AnnIndex {
         // None = whole-tree rewrite + root swap: required for tombstone
         // retirement, and cheaper than per-cell swaps when every cell
         // is fragmented anyway (fresh-build salt, heavy streaming).
-        val frag = if (tomb.isDefined) Array.empty[Int] else fragmentedCells(root)
+        val frag = if (hide.isDefined) Array.empty[Int] else fragmentedCells(root)
         // Full-tree rewrite + root swap when: retiring tombstones (a
         // doomed row may sit anywhere), every cell is fragmented (one
         // rename beats per-cell swaps), or the fragmented set is too
         // large to push as an `isin` partition filter (a 32k-literal
         // list bloats the plan past what it saves).
         val only =
-          if (tomb.isDefined ||
+          if (hide.isDefined ||
               (cds.nonEmpty && frag.length == cds.length) ||
               frag.length > 4096) None
           else Some(frag)
-        val bytes = cds.flatMap(cd => dataFiles(cd.getPath)).map(_.getLen).sum
+        val bytes = cds.flatMap(dataFiles).map(_.getLen).sum
         val avgCell = bytes.toDouble / math.max(1, cds.length)
         val nSalt = math.min(8L, math.max(1L, math.ceil(avgCell / targetBytes).toLong)).toInt
         val tmp = new org.apache.hadoop.fs.Path(s"$dir/_compact_tmp/${root.getName}")
@@ -646,8 +561,7 @@ object AnnIndex {
           val all = spark.read.parquet(root.toString)
           val src = only.fold(all)(cs =>
             all.filter(col("cell").isin(cs.map(Integer.valueOf).toIndexedSeq: _*)))
-          val live = tomb.fold(src)(t =>
-            src.join(Similarity.guardedRowBroadcast(t), Seq("vec_id"), "left_anti"))
+          val live = hide.fold(src)(_(src))
           live.repartition(col("cell"), pmod(hash(col("vec_id")), lit(nSalt)))
             .write.mode("overwrite").partitionBy("cell").parquet(tmp.toString)
           graft.sources.SwapHooks.preSwap(root.toString)
@@ -674,8 +588,7 @@ object AnnIndex {
       fs.delete(new org.apache.hadoop.fs.Path(s"$dir/_compact_tmp"), true)
       fs.delete(new org.apache.hadoop.fs.Path(s"$dir/_compact_old"), true)
       // Tombstones now physically retired from both trees — clear them.
-      if (tomb.isDefined)
-        fs.delete(new org.apache.hadoop.fs.Path(s"$dir/tombstones"), true)
+      if (hide.isDefined) state(dir).clearTombstones(spark)
       total
     }
   }
@@ -743,10 +656,10 @@ object AnnIndex {
     val probeRows = cellCounts.map(_._2).sum
     val scan0 = spark.read.parquet(vectorsPath(dir))
       .filter($"cell".isin(probedCells.map(Integer.valueOf).toIndexedSeq: _*))
-    val vectors = minusTombstones(spark, dir,
+    val vectors = state(dir).minusTombstones(spark,
       filter.fold(scan0)(scan0.filter)
         .select($"vec_id".as("neighbor_id"), $"v".as("nv"), $"cell"),
-      on = "neighbor_id")
+      "neighbor_id")
     // The broadcast hint bypasses Spark's size threshold, so guard it:
     // the exploded probe frame is Q * nProbe rows EACH carrying the
     // full query vector — a large query batch would OOM executors as a
@@ -791,7 +704,7 @@ object AnnIndex {
       dir: String,
       m: Int = 16,
       codes: Int = 32,
-      iters: Int = 5): Unit = withWriterLock(spark, dir) {
+      iters: Int = 5): Unit = state(dir).withWriterLock(spark) {
     import spark.implicits._
     val fs = fsFor(spark, dir)
     checkLayout(fs, dir)
@@ -902,9 +815,8 @@ object AnnIndex {
     // filter pushes into the partition-pruned parquet read.
     val codesScan0 = spark.read.parquet(pqcodesPath(dir))
       .filter($"cell".isin(probedCells.map(Integer.valueOf).toIndexedSeq: _*))
-    val codesDf = minusTombstones(spark, dir,
-      filter.fold(codesScan0)(codesScan0.filter),
-      on = "vec_id")
+    val codesDf = state(dir).minusTombstones(spark,
+      filter.fold(codesScan0)(codesScan0.filter))
     // Broadcast guard, as in [[topK]]: the probe frame is Q * nProbe
     // rows each carrying an m * codes float LUT.
     val m = books.length

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.{IndexState, TinyParquet}
+
 /** Persisted BM25 lexical index — the retrieval twin of [[AnnIndex]],
   * completing the serving tier's symmetry: vector search probes a
   * persisted IVF tree, lexical search probes a persisted inverted
@@ -112,12 +114,11 @@ object Bm25Index {
       throw new IllegalStateException(
         s"no BM25 index at $dir (missing lex/) — run Bm25Index.build first")
 
-  private[graft] def withWriterLock[T](spark: SparkSession, dir: String)(body: => T): T = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.sources.WriterLock.withLock(
-      fs, graft.sources.WriterLock.lockPath(dir), s"Bm25Index $dir")(body)
-  }
+  /** The index's shared lifecycle state (writer lock, tombstones keyed
+    * by `doc_id`, stream commits — [[IndexState]]).
+    */
+  private[graft] def state(dir: String): IndexState =
+    IndexState(dir, s"Bm25Index $dir", IndexState.longKey("doc_id"))
 
   /** Driver-side rows of a TINY metadata parquet table (`meta/`,
     * `stats/`: one row per build or mutation, single-digit KB) — a
@@ -378,7 +379,7 @@ object Bm25Index {
     val reserved = Set("term", "doc_id", "tf", "dl", "tb")
     require(metaCols.forall(c => !reserved(c) && c != idCol && c != textCol),
       s"metaCols collide with index columns: ${metaCols.mkString(", ")}")
-    withWriterLock(spark, dir) {
+    state(dir).withWriterLock(spark) {
       import spark.implicits._
       val fs = fsFor(spark, dir)
       if (fs.exists(new org.apache.hadoop.fs.Path(metaPath(dir)))) {
@@ -440,13 +441,7 @@ object Bm25Index {
         new org.apache.hadoop.fs.Path(s"$dir/_build_tmp/lex"),
         new org.apache.hadoop.fs.Path(lexPath(dir)),
         new org.apache.hadoop.fs.Path(s"$dir/_build_old"))
-      // Generation state: a rebuild starts with every given doc live,
-      // and a fresh stream restarts batchIds at 0 — stale markers would
-      // silently skip its first batches.
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/tombstones"), true)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/_stream_commits"), true)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/_stream_staging"), true)
-      fs.delete(staging, true)
+      state(dir).resetGeneration(spark, staging.toString)
       invalidateProbeCache(dir)
       nDocs
     }
@@ -547,7 +542,7 @@ object Bm25Index {
       dir: String,
       docs: DataFrame,
       textCol: String = "text",
-      idCol: String = "doc_id"): Long = withWriterLock(spark, dir) {
+      idCol: String = "doc_id"): Long = state(dir).withWriterLock(spark) {
     checkIndex(spark, dir)
     requireStatsHasTerms(spark, dir)
     val nTb = readNTb(spark, dir)
@@ -589,42 +584,12 @@ object Bm25Index {
       spark: SparkSession,
       dir: String,
       ids: DataFrame,
-      idCol: String = "doc_id"): Long = withWriterLock(spark, dir) {
+      idCol: String = "doc_id"): Long = state(dir).withWriterLock(spark) {
     checkIndex(spark, dir)
-    val requested = ids.select(col(idCol).cast("long").as("doc_id")).distinct()
-      .localCheckpoint()
-    val reqSide =
-      if (requested.count() * 56L <= Similarity.BroadcastGuardBytes) broadcast(requested)
-      else requested
     // One column-pruned semi scan of the postings' doc_id column; the
     // distinct is takedown-bounded (post-semi).
-    val present = spark.read.parquet(postingsPath(dir)).select("doc_id")
-      .join(reqSide, Seq("doc_id"), "left_semi")
-      .distinct()
-    val doomed = readTombstones(spark, dir)
-      .fold(present)(t =>
-        present.join(Similarity.guardedRowBroadcast(t), Seq("doc_id"), "left_anti"))
-      .localCheckpoint()
-    val n = doomed.count()
-    if (n > 0)
-      doomed.write.mode("append").parquet(s"$dir/tombstones")
-    n
-  }
-
-  private def readTombstones(spark: SparkSession, dir: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    // takedown-sized: under the tininess guard the ids read DRIVER-SIDE
-    // into a LocalRelation (no read/distinct/guard-count jobs on the
-    // probe path); past it, the Spark read — identical distinct set
-    else graft.sources.TinyParquet.longsIfTiny(
-      spark.sparkContext.hadoopConfiguration, p.toString, "doc_id") match {
-      case Some(ids) =>
-        import spark.implicits._
-        Some(spark.createDataset(ids.distinct.sorted.toSeq).toDF("doc_id"))
-      case None => Some(spark.read.parquet(p.toString).select("doc_id").distinct())
-    }
+    state(dir).takedown(spark,
+      spark.read.parquet(postingsPath(dir)).select("doc_id"), ids, idCol, "doc_id")
   }
 
   /** Physically retire tombstoned docs and re-collapse the delta
@@ -652,41 +617,20 @@ object Bm25Index {
   def compact(
       spark: SparkSession,
       dir: String,
-      blockMax: Option[Boolean] = None): Long = withWriterLock(spark, dir) {
+      blockMax: Option[Boolean] = None): Long = state(dir).withWriterLock(spark) {
     checkIndex(spark, dir)
     val fs = fsFor(spark, dir)
     val nTb = readNTb(spark, dir)
     import spark.implicits._
-    // Refuse to compact over an UNCOMMITTED streamed batch (a
-    // `b<id>.parquet` whose marker is absent — a crashed attempt
-    // pending redelivery): the rewrite would merge its rows into the
-    // fresh generation AND destroy the deterministic name the retry
-    // replaces, so the redelivery would install a second copy. Loud +
-    // retryable, the [[AnnIndex.compact]] contract.
-    val batchFile = "b(\\d+)\\.parquet".r
-    val tableFiles: Seq[org.apache.hadoop.fs.FileStatus] =
-      Seq(postingsPath(dir), dfdPath(dir), blockmaxPath(dir))
-        .map(new org.apache.hadoop.fs.Path(_))
-        .filter(fs.exists) // pre-sidecar indexes have no blockmax/
-        .flatMap(root => fs.listStatus(root).toSeq
-          .filter(st => st.isDirectory && st.getPath.getName.startsWith("tb="))
-          .flatMap(td => fs.listStatus(td.getPath).toSeq)) ++
-        fs.listStatus(new org.apache.hadoop.fs.Path(statsPath(dir))).toSeq
-    val pending = tableFiles
-      .flatMap(st => batchFile.findFirstMatchIn(st.getPath.getName).map(_.group(1)))
-      .distinct
-      .filterNot(id => fs.exists(
-        new org.apache.hadoop.fs.Path(s"$dir/_stream_commits/$id")))
-    if (pending.nonEmpty)
-      throw new IllegalStateException(
-        s"compact: uncommitted streamed batch(es) ${pending.mkString(", ")} present " +
-          "— a crashed ingest attempt is pending redelivery; let the stream recover, then compact")
+    // A crashed streamed attempt pending redelivery blocks the rewrite
+    // (pre-sidecar indexes have no blockmax/ — no partitions there).
+    state(dir).requireStreamCommitted(spark,
+      Seq(postingsPath(dir), dfdPath(dir), blockmaxPath(dir)).flatMap(t =>
+        IndexState.partitionDirs(spark, new org.apache.hadoop.fs.Path(t), "tb=")) :+
+        new org.apache.hadoop.fs.Path(statsPath(dir)))
     val staging = new org.apache.hadoop.fs.Path(s"$dir/_compact_tmp")
     fs.delete(staging, true)
-    val tomb = readTombstones(spark, dir)
-    val live = tomb.fold(spark.read.parquet(postingsPath(dir)))(t =>
-      spark.read.parquet(postingsPath(dir))
-        .join(Similarity.guardedRowBroadcast(t), Seq("doc_id"), "left_anti"))
+    val live = state(dir).minusTombstones(spark, spark.read.parquet(postingsPath(dir)))
       .localCheckpoint()
     // Stats aggregation FIRST: its n_docs doubles as the zero-live
     // check (one job instead of a separate isEmpty round trip).
@@ -731,7 +675,7 @@ object Bm25Index {
       new org.apache.hadoop.fs.Path(s"$dir/_compact_tmp/lex"),
       new org.apache.hadoop.fs.Path(lexPath(dir)),
       new org.apache.hadoop.fs.Path(s"$dir/_compact_old"))
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/tombstones"), true)
+    state(dir).clearTombstones(spark)
     fs.delete(staging, true)
     invalidateProbeCache(dir)
     nDocs
@@ -747,7 +691,7 @@ object Bm25Index {
     * Returns the number of docs merged in.
     */
   def merge(spark: SparkSession, dir: String, otherDir: String): Long =
-    withWriterLock(spark, dir) {
+    state(dir).withWriterLock(spark) {
       checkIndex(spark, dir)
       checkIndex(spark, otherDir)
       requireStatsHasTerms(spark, dir)
@@ -755,9 +699,7 @@ object Bm25Index {
       val meta = indexMetaCols(spark, dir)
       val otherPosts = spark.read.parquet(postingsPath(otherDir))
       requireMeta(otherPosts, meta, dir)
-      val live = readTombstones(spark, otherDir)
-        .fold(otherPosts)(t =>
-          otherPosts.join(Similarity.guardedRowBroadcast(t), Seq("doc_id"), "left_anti"))
+      val live = state(otherDir).minusTombstones(spark, otherPosts)
         .select(Seq(col("term"), col("doc_id"), col("tf"), col("dl")) ++
           meta.map(col): _*)
         .withColumn("tb", tbOf(col("term"), nTb)) // THIS index's bucketing
@@ -809,14 +751,10 @@ object Bm25Index {
 
   def stats(spark: SparkSession, dir: String): IndexStats = {
     checkIndex(spark, dir)
-    val fs = fsFor(spark, dir)
-    val root = new org.apache.hadoop.fs.Path(postingsPath(dir))
-    val files = fs.listStatus(root)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("tb="))
-      .map(td => fs.listStatus(td.getPath).count { st =>
-        st.isFile && !st.getPath.getName.startsWith("_") &&
-          !st.getPath.getName.startsWith(".")
-      }.toLong).sum
+    val files = IndexState
+      .partitionDirs(spark, new org.apache.hadoop.fs.Path(postingsPath(dir)), "tb=")
+      .map(td => TinyParquet.dataFiles(spark.sparkContext.hadoopConfiguration,
+        td.toString).length.toLong).sum
     import spark.implicits._
     // Delta sums come from the driver-side tiny-table read (no Spark
     // job). Pre-vocab-delta layouts (2-column stats/, n_terms = -1)
@@ -829,7 +767,7 @@ object Bm25Index {
       if (nTermsSum >= 0L) nTermsSum
       else spark.read.parquet(dfdPath(dir))
         .agg(count_distinct($"term")).as[Long].head()
-    val tombCount = readTombstones(spark, dir).fold(0L)(_.count())
+    val tombCount = state(dir).tombstoneCount(spark)
     IndexStats(
       docs = nDocs - tombCount,
       terms = nTerms,
@@ -1372,9 +1310,7 @@ object Bm25Index {
       .join(qtSide, "term")
     // Takedowns vanish immediately: candidate-bounded anti-join against
     // the (guarded-broadcast, takedown-sized) tombstone set.
-    val cands = readTombstones(spark, dir)
-      .fold(cands0)(t =>
-        cands0.join(Similarity.guardedRowBroadcast(t), Seq("doc_id"), "left_anti"))
+    val cands = state(dir).minusTombstones(spark, cands0)
     // Fused sum+rank ([[Similarity.sumRankTopKMicro]]): the exhaustive
     // candidate stream's (query, doc) keys are near-unique (each doc
     // matches most queries on one term), so the old
@@ -1660,7 +1596,7 @@ object Bm25Index {
         nDocs, avgdl, rep, preTermStats = Some(termStats),
         qtPairs = Some(qtPairsAll))
     rep.path = "pruned"
-    val tombSide = readTombstones(spark, dir).map(Similarity.guardedRowBroadcast(_))
+    val hideTombstones = state(dir).tombstoneFilter(spark)
     // Exact scores of a (query, term, block-mask) pair list against
     // the postings: bucket-pruned scan, pushed term filter, metadata
     // filter pushed, the mask tested in-scan against the posting's
@@ -1710,7 +1646,7 @@ object Bm25Index {
         masked.join(s._2, Seq("query_id", "doc_id"), "left_semi"))
       val cands =
         if (surv.isDefined) paired
-        else tombSide.fold(paired)(t => paired.join(t, Seq("doc_id"), "left_anti"))
+        else hideTombstones.fold(paired)(_(paired))
       cands.select($"query_id", $"doc_id",
           Bm25.contribMicro($"tf", $"dl", lit(avgdl), $"idf_micro", k1, b).as("c_micro"))
         .groupBy("query_id", "doc_id")

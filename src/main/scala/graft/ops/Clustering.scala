@@ -246,8 +246,16 @@ object Clustering {
     *     2-3 jobs per Lloyd iteration.
     *   - shuffle (the at-scale fallback): the typed-Aggregator groupByKey
     *     collect, whose driver traffic is k rows, not partitions * k —
-    *     taken when `defaultParallelism * keys * dim` partial bytes
-    *     could not sit on the driver.
+    *     taken when `partitions * keys * dim` partial bytes could not
+    *     sit on the driver.
+    *
+    * The driver combine collects one partial set per ACTUAL partition,
+    * so `partitions` must not undercount them — yet counting them
+    * exactly (`rdd.getNumPartitions` under AQE) would run the plan's
+    * shuffle stages. The estimate is the largest count known without a
+    * job: the planned output partitioning (a repartitioned or
+    * multi-slice frame reports its width), the shuffle width (what an
+    * upstream exchange produces at most), and the default parallelism.
     */
   private[graft] def centroidRows[V](
       pairs: org.apache.spark.sql.Dataset[(Int, V)],
@@ -256,8 +264,11 @@ object Clustering {
       dim: Long): Array[(Int, CentroidAcc)] = {
     val spark = pairs.sparkSession
     import spark.implicits._
-    val partialBytes =
-      spark.sparkContext.defaultParallelism.toLong * keys * (dim * 24L + 64L)
+    val partitions = Seq(
+      spark.sparkContext.defaultParallelism,
+      spark.sessionState.conf.numShufflePartitions,
+      pairs.queryExecution.executedPlan.outputPartitioning.numPartitions).max
+    val partialBytes = partitions.toLong * keys * (dim * 24L + 64L)
     if (partialBytes <= DriverCombineMaxBytes) {
       val parts = pairs.mapPartitions { it =>
         val accs = new java.util.HashMap[Integer, CentroidAcc]()

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.BucketedLayout
+import graft.sources.{BucketedLayout, IndexState, TinyParquet}
 
 /** Persisted exact-dedup index — cross-run incremental deduplication.
   *
@@ -39,44 +39,21 @@ object DedupIndex {
   private def hashOf(textCol: String): Column =
     md5(Dedup.normalizeText(col(textCol)))
 
-  /** Single-writer lock (see [[graft.sources.WriterLock]]): every
-    * mutator holds `<dir>/_writer.lock` for the call — a compact racing
-    * an ingest would otherwise silently drop the rows appended between
-    * compact's snapshot and its directory swap (un-seeing their hashes
-    * forever). The index root is recovered from the catalog entry, so
-    * mutators that only know the table name lock the same file the
-    * dir-carrying ones do.
+  /** The index's shared lifecycle state ([[IndexState]]) at `root`:
+    * tombstones are (text_hash, keep_id) pairs. Mutators get it through
+    * [[IndexState.mutate]] (the root resolved fresh, the writer lock
+    * held), probes through [[state]].
     */
-  private[graft] def withWriterLock[T](spark: SparkSession, dirStr: String, table: String)(body: => T): T = {
-    // Mutators must never lock the wrong root: resolve FRESH (given
-    // dir, or from the catalog — never the probe-path cache, which can
-    // be stale if the table was re-registered elsewhere), then refresh
-    // the cache for the probe path.
-    val root =
-      if (dirStr != null) new org.apache.hadoop.fs.Path(dirStr)
-      else freshRoot(spark, table)
-    rootCache.put(table, root)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.sources.WriterLock.withLock(
-      fs, graft.sources.WriterLock.lockPath(root.toString), s"DedupIndex $table")(body)
-  }
+  private[graft] def stateAt(table: String)(root: String): IndexState =
+    IndexState(root, s"DedupIndex $table", IndexState.stringLongKey("text_hash", "keep_id"),
+      tombstoneRowBytes = 64L, legacyTombstoneTable = Some(tombstonesTable(table)))
 
-  /** Catalog-root lookups run on the PROBE path too (the per-call
-    * tombstone check), and `getTableMetadata` is a driver round-trip —
-    * cache the root per table name for probes. Every mutator refreshes
-    * the entry from the catalog, so the worst staleness is one probe
-    * reading the previous location's tombstones after an out-of-band
-    * re-registration.
-    */
-  private val rootCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.hadoop.fs.Path]()
+  private def state(spark: SparkSession, table: String): IndexState =
+    stateAt(table)(IndexState.catalogRoot(spark, table).toString)
 
-  private def freshRoot(spark: SparkSession, table: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table)).location).getParent
-
-  /** Catalog name of the tombstone table (exists only after the first
-    * [[delete]]).
+  /** Catalog name older versions registered the tombstone set under
+    * (tombstones are now plain parquet at `<dir>/tombstones`;
+    * [[build]]/[[merge]]/[[compact]] drop a leftover entry).
     */
   def tombstonesTable(table: String): String = s"${table}_tombstones"
 
@@ -88,77 +65,13 @@ object DedupIndex {
   final case class IndexStats(hashes: Long, dataFiles: Long, tombstones: Long)
 
   def stats(spark: SparkSession, table: String): IndexStats = {
-    val path = new org.apache.hadoop.fs.Path(indexRoot(spark, table), "hashes")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = fs.listStatus(path).count { st =>
-      st.isFile && !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith(".")
-    }
+    val st = state(spark, table)
     IndexStats(
       hashes = spark.table(table).count(),
-      dataFiles = files.toLong,
-      tombstones = tombstones(spark, table).fold(0L)(_.count()))
+      dataFiles = TinyParquet.dataFiles(spark.sparkContext.hadoopConfiguration,
+        s"${st.root}/hashes").length.toLong,
+      tombstones = st.tombstoneCount(spark))
   }
-
-  /** The index root — the parent of the bucketed table's directory,
-    * recovered from the catalog for mutators that only know the name.
-    */
-  private def indexRoot(spark: SparkSession, table: String): org.apache.hadoop.fs.Path = {
-    val hit = rootCache.get(table) // get-first: computeIfAbsent locks the bin even on hits
-    if (hit != null) hit
-    else rootCache.computeIfAbsent(table, _ => freshRoot(spark, table))
-  }
-
-  /** The live tombstone set, if any: (text_hash, keep_id) rows retired
-    * from probe visibility but not yet physically removed. Tombstones
-    * are stored EXTERNAL under `<dir>/tombstones` — they are index
-    * state, not session state: a fresh session that re-registers the
-    * index must still see the takedowns, so a missing catalog entry
-    * falls back to the path.
-    */
-  private def tombstones(spark: SparkSession, table: String): Option[DataFrame] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(indexRoot(spark, table), "tombstones")
-    val files = graft.sources.TinyParquet.dataFiles(conf, p.toString)
-    // takedown-sized: under the tininess guard the pairs read
-    // DRIVER-SIDE into a LocalRelation (the catalog table is external
-    // over exactly this path) — no read/distinct/guard-count jobs on
-    // the probe path; past the guard, the Spark read
-    if (files.nonEmpty && files.map(_.getLen).sum <= (8L << 20)) {
-      import spark.implicits._
-      val rows = graft.sources.TinyParquet.rows(conf, p.toString).iterator
-        .map(g => (g.getString("text_hash", 0), g.getLong("keep_id", 0)))
-        .toSeq.distinct.sorted
-      Some(spark.createDataset(rows).toDF("text_hash", "keep_id"))
-    } else if (spark.catalog.tableExists(tombstonesTable(table)))
-      Some(spark.table(tombstonesTable(table)).select("text_hash", "keep_id").distinct())
-    else {
-      val fs = p.getFileSystem(conf)
-      if (!fs.exists(p)) None
-      else Some(spark.read.parquet(p.toString).select("text_hash", "keep_id").distinct())
-    }
-  }
-
-  /** Drop the tombstone catalog entry AND its files (the table is
-    * external, so DROP TABLE alone would leave the files to resurrect
-    * in the next session).
-    */
-  private def clearTombstones(spark: SparkSession, table: String,
-      root: org.apache.hadoop.fs.Path): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS ${tombstonesTable(table)}")
-    val p = new org.apache.hadoop.fs.Path(root, "tombstones")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-  }
-
-  /** Exclude tombstoned rows from an index frame. Tombstone sets are
-    * takedown-sized (small by nature), so the anti-join broadcasts —
-    * under the guard — and the index side keeps its bucketed
-    * partitioning: no new exchange.
-    */
-  private def minusTombstones(
-      spark: SparkSession, table: String, index: DataFrame): DataFrame =
-    tombstones(spark, table).fold(index)(t =>
-      index.join(Similarity.guardedRowBroadcast(t, perRowBytes = 64L),
-        Seq("text_hash", "keep_id"), "left_anti"))
 
   /** Tombstone every index row whose `keep_id` is in `ids` — the
     * takedown path (copyright, PII, robots retroactivity). Effects:
@@ -174,35 +87,9 @@ object DedupIndex {
       spark: SparkSession,
       table: String,
       ids: DataFrame,
-      idCol: String = "doc_id"): Long = withWriterLock(spark, null, table) {
-    val keep = ids.select(col(idCol).cast("long").as("keep_id")).distinct()
-      .localCheckpoint()
-    // The ids frame is caller-supplied — broadcast only under the
-    // guard; already-tombstoned rows don't re-count (a redelivered
-    // takedown batch is a counted-once no-op, not tombstone growth).
-    val keepSide =
-      if (keep.count() * 56L <= Similarity.BroadcastGuardBytes) broadcast(keep)
-      else keep
-    val matched = spark.table(table)
-      .join(keepSide, "keep_id")
-      .select(col("text_hash"), col("keep_id"))
-      .distinct()
-    val doomed = tombstones(spark, table)
-      .fold(matched)(t =>
-        matched.join(Similarity.guardedRowBroadcast(t, perRowBytes = 64L),
-          Seq("text_hash", "keep_id"), "left_anti"))
-      .localCheckpoint()
-    val n = doomed.count()
-    if (n > 0) {
-      // External table at <dir>/tombstones. A fresh session appends to
-      // the EXISTING files (the path read in [[tombstones]] already
-      // honors them); only the catalog entry is (re)created here.
-      val p = new org.apache.hadoop.fs.Path(indexRoot(spark, table), "tombstones")
-      doomed.write.mode(SaveMode.Append).format("parquet")
-        .option("path", p.toString)
-        .saveAsTable(tombstonesTable(table))
-    }
-    n
+      idCol: String = "doc_id"): Long =
+    IndexState.mutate(spark, null, table)(stateAt(table)) { st =>
+    st.takedown(spark, spark.table(table), ids, idCol, "keep_id")
   }
 
   /** Build the index from a seed corpus: one row per distinct
@@ -217,7 +104,7 @@ object DedupIndex {
       nBuckets: Int = 64,
       textCol: String = "text",
       idCol: String = "doc_id"): Unit =
-    withWriterLock(docs.sparkSession, dir, table) {
+    IndexState.mutate(docs.sparkSession, dir, table)(stateAt(table)) { st =>
       val spark = docs.sparkSession
       // Fresh generation, staged beside the live table and swapped in
       // with one rename (BucketedLayout.writeBucketedSwap): a probe
@@ -226,11 +113,8 @@ object DedupIndex {
         spark, Dedup.exactDedup(docs, textCol, idCol),
         table, s"$dir/hashes", "text_hash", nBuckets)
       // A rebuild is a fresh generation — prior takedowns don't carry
-      // over. Cleared AFTER the swap (conservative: between swap and
-      // clear a probe can transiently treat re-ingested deleted content
-      // as new; it never resurrects a takedown against the old
-      // generation, which clearing FIRST would).
-      clearTombstones(spark, table, new org.apache.hadoop.fs.Path(dir))
+      // over (cleared AFTER the swap, [[IndexState.resetGeneration]]).
+      st.resetGeneration(spark)
     }
 
   /** Rows of `batch` whose content is NOT in the index, one survivor
@@ -250,7 +134,7 @@ object DedupIndex {
       textCol: String = "text",
       idCol: String = "doc_id"): DataFrame = {
     val cols = batch.columns
-    val seen = minusTombstones(spark, table,
+    val seen = state(spark, table).minusTombstones(spark,
       BucketedLayout.readBucketed(spark, table).select("text_hash", "keep_id"))
       .select("text_hash")
     batch
@@ -276,7 +160,8 @@ object DedupIndex {
       table: String,
       batch: DataFrame,
       textCol: String = "text",
-      idCol: String = "doc_id"): DataFrame = withWriterLock(spark, null, table) {
+      idCol: String = "doc_id"): DataFrame =
+    IndexState.mutate(spark, null, table)(stateAt(table)) { _ =>
     val fresh = filterNew(spark, table, batch, textCol, idCol).localCheckpoint()
     fresh
       .select(col("text_hash"), col("n_dups"), col(idCol).cast("long").as("keep_id"))
@@ -305,20 +190,15 @@ object DedupIndex {
     * bucketing. Returns the merged index's data-file count.
     */
   def merge(spark: SparkSession, table: String, dir: String, other: String): Long =
-    withWriterLock(spark, dir, table) {
-      val nBuckets = spark.table(table).queryExecution.analyzed.collectFirst {
-        case r: org.apache.spark.sql.catalyst.catalog.HiveTableRelation =>
-          r.tableMeta.bucketSpec.map(_.numBuckets)
-        case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          r.catalogTable.flatMap(_.bucketSpec).map(_.numBuckets)
-      }.flatten.getOrElse(64)
+    IndexState.mutate(spark, dir, table)(stateAt(table)) { st =>
+      val nBuckets = BucketedLayout.bucketCount(spark, table)
       // Collapse each side's zombie double-append rows FIRST (max/min,
       // the [[compact]] rule — a zombie is a re-written copy of the
       // same ingest, not new duplicates), so the cross-side sum counts
       // every ingest history exactly once. The per-side groupBy reuses
       // the bucketed partitioning — no exchange.
       def liveCollapsed(t: String): DataFrame =
-        minusTombstones(spark, t, spark.table(t))
+        state(spark, t).minusTombstones(spark, spark.table(t))
           .groupBy("text_hash")
           .agg(max("n_dups").as("n_dups"), min("keep_id").as("keep_id"))
       val total = BucketedLayout.writeBucketedSwap(
@@ -331,7 +211,7 @@ object DedupIndex {
       // (cleared after the swap, the compact contract); the other
       // index's tombstones were honored by reading only its live rows
       // and belong to IT — untouched.
-      clearTombstones(spark, table, new org.apache.hadoop.fs.Path(dir))
+      st.clearTombstones(spark)
       total
     }
 
@@ -350,13 +230,8 @@ object DedupIndex {
     * count after compaction.
     */
   def compact(spark: SparkSession, table: String, dir: String): Long =
-    withWriterLock(spark, dir, table) {
-    val nBuckets = spark.table(table).queryExecution.analyzed.collectFirst {
-      case r: org.apache.spark.sql.catalyst.catalog.HiveTableRelation =>
-        r.tableMeta.bucketSpec.map(_.numBuckets)
-      case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        r.catalogTable.flatMap(_.bucketSpec).map(_.numBuckets)
-    }.flatten.getOrElse(64)
+    IndexState.mutate(spark, dir, table)(stateAt(table)) { st =>
+    val nBuckets = BucketedLayout.bucketCount(spark, table)
     // One fresh generation: same layout contract as build's, written
     // through the same staged entry point (probes read the live table
     // untouched until the one-rename swap). Tombstoned rows are dropped
@@ -365,13 +240,13 @@ object DedupIndex {
     // resurrect through a later re-ingest row of the same hash.
     val total = BucketedLayout.writeBucketedSwap(
       spark,
-      minusTombstones(spark, table, spark.table(table))
+      st.minusTombstones(spark, spark.table(table))
         .groupBy("text_hash")
         .agg(max("n_dups").as("n_dups"), min("keep_id").as("keep_id")),
       table, s"$dir/hashes", "text_hash", nBuckets)
     // Tombstones are now physically retired — clear them so a LATER
     // re-ingest of a deleted keeper id is not retroactively hidden.
-    clearTombstones(spark, table, new org.apache.hadoop.fs.Path(dir))
+    st.clearTombstones(spark)
     total
     }
 }

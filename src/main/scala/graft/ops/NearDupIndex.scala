@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.BucketedLayout
+import graft.sources.{BucketedLayout, IndexState, TinyParquet}
 
 /** Persisted MinHash-LSH near-duplicate index — cross-run FUZZY
   * deduplication, completing the serving-index family: [[DedupIndex]]
@@ -42,6 +42,10 @@ object NearDupIndex {
 
   def bucketsTable(prefix: String): String = s"${prefix}_buckets"
   def shinglesTable(prefix: String): String = s"${prefix}_shingles"
+  /** Catalog name older versions registered the tombstone set under
+    * (tombstones are now plain parquet at `<dir>/tombstones`;
+    * [[build]]/[[merge]]/[[compact]] drop a leftover entry).
+    */
   def tombstonesTable(prefix: String): String = s"${prefix}_tombstones"
   def droppedTable(prefix: String): String = s"${prefix}_dropped"
 
@@ -58,15 +62,9 @@ object NearDupIndex {
       tombstones: Long)
 
   def stats(spark: SparkSession, prefix: String): IndexStats = {
-    val root = indexRoot(spark, prefix)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def files(sub: String): Long = {
-      val p = new org.apache.hadoop.fs.Path(root, sub)
-      if (!fs.exists(p)) 0L
-      else fs.listStatus(p).count { st =>
-        st.isFile && !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith(".")
-      }.toLong
-    }
+    val st = state(spark, prefix)
+    def files(sub: String): Long = TinyParquet.dataFiles(
+      spark.sparkContext.hadoopConfiguration, s"${st.root}/$sub").length.toLong
     IndexStats(
       docs = spark.table(shinglesTable(prefix)).select("doc_id").distinct().count(),
       postings = spark.table(bucketsTable(prefix)).count(),
@@ -75,81 +73,23 @@ object NearDupIndex {
         if (spark.catalog.tableExists(droppedTable(prefix)))
           spark.table(droppedTable(prefix)).count()
         else 0L,
-      tombstones = tombstones(spark, prefix).fold(0L)(_.count()))
+      tombstones = st.tombstoneCount(spark))
   }
 
-  /** Single-writer lock (see [[graft.sources.WriterLock]]) on
-    * `<dir>/_writer.lock`: compact racing an ingest/append would
-    * silently drop the postings appended between its snapshot and the
-    * directory swap; the two tables' appends must also land as one
-    * logical mutation. Mutators that only know the prefix recover the
-    * index root from the buckets table's catalog entry.
+  /** The index's shared lifecycle state ([[IndexState]]) at `root`:
+    * tombstones are indexed doc_ids. Mutators get it through
+    * [[IndexState.mutate]] on the buckets table (the root resolved
+    * fresh, the writer lock held — compact racing an ingest/append
+    * would silently drop postings appended between its snapshot and
+    * swap, and the two tables' appends must land as one logical
+    * mutation), probes through [[state]].
     */
-  private[graft] def withWriterLock[T](spark: SparkSession, dirStr: String, prefix: String)(body: => T): T = {
-    // Mutators resolve FRESH (never the probe-path cache — stale after
-    // an out-of-band re-registration would lock the wrong root) and
-    // refresh the cache; see [[DedupIndex.withWriterLock]].
-    val root =
-      if (dirStr != null) new org.apache.hadoop.fs.Path(dirStr)
-      else freshRoot(spark, prefix)
-    rootCache.put(prefix, root)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.sources.WriterLock.withLock(
-      fs, graft.sources.WriterLock.lockPath(root.toString), s"NearDupIndex $prefix")(body)
-  }
+  private[graft] def stateAt(prefix: String)(root: String): IndexState =
+    IndexState(root, s"NearDupIndex $prefix", IndexState.longKey("doc_id"),
+      legacyTombstoneTable = Some(tombstonesTable(prefix)))
 
-  /** Root lookups run on the probe path (tombstone check) — cached per
-    * prefix for probes, refreshed by every mutator, as in
-    * [[DedupIndex]].
-    */
-  private val rootCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.hadoop.fs.Path]()
-
-  private def freshRoot(spark: SparkSession, prefix: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(bucketsTable(prefix))).location).getParent
-
-  /** The index root — the parent of the buckets table's directory. */
-  private def indexRoot(spark: SparkSession, prefix: String): org.apache.hadoop.fs.Path = {
-    val hit = rootCache.get(prefix) // get-first: computeIfAbsent locks the bin even on hits
-    if (hit != null) hit
-    else rootCache.computeIfAbsent(prefix, _ => freshRoot(spark, prefix))
-  }
-
-  /** The live tombstone set, if any: indexed doc_ids retired from
-    * probe visibility but not yet physically removed. Stored EXTERNAL
-    * under `<dir>/tombstones` — index state, not session state: a
-    * fresh session that re-registers the index must still see the
-    * takedowns, so a missing catalog entry falls back to the path.
-    */
-  private def tombstones(spark: SparkSession, prefix: String): Option[DataFrame] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(indexRoot(spark, prefix), "tombstones")
-    // takedown-sized: under the tininess guard the ids read DRIVER-SIDE
-    // into a LocalRelation (the catalog table is external over exactly
-    // this path) — no read/distinct/guard-count jobs on the probe path
-    graft.sources.TinyParquet.longsIfTiny(conf, p.toString, "doc_id") match {
-      case Some(ids) =>
-        import spark.implicits._
-        Some(spark.createDataset(ids.distinct.sorted.toSeq).toDF("doc_id"))
-      case None if spark.catalog.tableExists(tombstonesTable(prefix)) =>
-        Some(spark.table(tombstonesTable(prefix)).select("doc_id").distinct())
-      case None =>
-        val fs = p.getFileSystem(conf)
-        if (!fs.exists(p)) None
-        else Some(spark.read.parquet(p.toString).select("doc_id").distinct())
-    }
-  }
-
-  /** Drop the tombstone catalog entry AND its files (external table —
-    * DROP TABLE alone leaves the files to resurrect next session).
-    */
-  private def clearTombstones(spark: SparkSession, prefix: String,
-      root: org.apache.hadoop.fs.Path): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS ${tombstonesTable(prefix)}")
-    val p = new org.apache.hadoop.fs.Path(root, "tombstones")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-  }
+  private def state(spark: SparkSession, prefix: String): IndexState =
+    stateAt(prefix)(IndexState.catalogRoot(spark, bucketsTable(prefix)).toString)
 
   /** Tombstone indexed documents by id — the takedown path. A
     * tombstoned doc is never returned by [[probePairs]] (so
@@ -161,41 +101,13 @@ object NearDupIndex {
       spark: SparkSession,
       tablePrefix: String,
       ids: DataFrame,
-      idCol: String = "doc_id"): Long = withWriterLock(spark, null, tablePrefix) {
-    val requested = ids.select(col(idCol).cast("long").as("doc_id")).distinct()
-      .localCheckpoint()
-    // count only ids actually indexed AND not already tombstoned
-    // ([[DedupIndex.delete]] semantics, counted-once on redelivery);
+      idCol: String = "doc_id"): Long =
+    IndexState.mutate(spark, null, bucketsTable(tablePrefix))(stateAt(tablePrefix)) { st =>
     // semi against the doc_id-bucketed shingles table — no index-sized
-    // shuffle. The caller-supplied ids broadcast only under the guard.
-    val reqSide =
-      if (requested.count() * 56L <= Similarity.BroadcastGuardBytes) broadcast(requested)
-      else requested
-    val present = spark.table(shinglesTable(tablePrefix)).select("doc_id")
-      .join(reqSide, Seq("doc_id"), "left_semi")
-      .distinct()
-    val doomed = tombstones(spark, tablePrefix)
-      .fold(present)(t =>
-        present.join(Similarity.guardedRowBroadcast(t), Seq("doc_id"), "left_anti"))
-      .localCheckpoint()
-    val n = doomed.count()
-    if (n > 0) {
-      val p = new org.apache.hadoop.fs.Path(indexRoot(spark, tablePrefix), "tombstones")
-      doomed.write.mode(SaveMode.Append).format("parquet")
-        .option("path", p.toString)
-        .saveAsTable(tombstonesTable(tablePrefix))
-    }
-    n
+    // shuffle
+    st.takedown(spark, spark.table(shinglesTable(tablePrefix)).select("doc_id"),
+      ids, idCol, "doc_id")
   }
-
-  /** Exclude tombstoned indexed docs (small takedown sets — broadcast
-    * under the guard, no new exchange on the index side).
-    */
-  private def minusTombstones(
-      spark: SparkSession, prefix: String, df: DataFrame, on: String): DataFrame =
-    tombstones(spark, prefix).fold(df)(t =>
-      df.join(Similarity.guardedRowBroadcast(t.withColumnRenamed("doc_id", on)),
-        Seq(on), "left_anti"))
 
   /** (doc_id, bb) postings of `docs` under the shared banding. */
   private def postings(docs: DataFrame, textCol: String, idCol: String, k: Int): DataFrame =
@@ -229,7 +141,9 @@ object NearDupIndex {
       maxBucket: Int = 64,
       textCol: String = "text",
       idCol: String = "doc_id",
-      k: Int = 3): Unit = withWriterLock(docs.sparkSession, dir, tablePrefix) {
+      k: Int = 3): Unit =
+    IndexState.mutate(docs.sparkSession, dir, bucketsTable(tablePrefix))(
+      stateAt(tablePrefix)) { st =>
     val spark = docs.sparkSession
     val (sh, post0) = shAndPostings(docs, textCol, idCol, k)
     val post = post0.localCheckpoint()
@@ -252,11 +166,9 @@ object NearDupIndex {
         droppedTable(tablePrefix), s"$dir/dropped", "bb", nBuckets))
     graft.sources.SwapHooks.preSwap(dir)
     staged.foreach(BucketedLayout.swapInStaged(spark, _))
-    // Prior takedowns don't carry into the fresh generation; cleared
-    // AFTER the swaps — between swap and clear a probe can transiently
-    // miss a pair against a re-indexed deleted doc (conservative), but
-    // never resurrect a takedown against the OLD generation.
-    clearTombstones(spark, tablePrefix, new org.apache.hadoop.fs.Path(dir))
+    // Prior takedowns don't carry into the fresh generation (cleared
+    // AFTER the swaps, [[IndexState.resetGeneration]]).
+    st.resetGeneration(spark)
   }
 
   /** Append a batch's postings and shingles to the index (no cap
@@ -270,7 +182,8 @@ object NearDupIndex {
       docs: DataFrame,
       textCol: String = "text",
       idCol: String = "doc_id",
-      k: Int = 3): Unit = withWriterLock(spark, null, tablePrefix) {
+      k: Int = 3): Unit =
+    IndexState.mutate(spark, null, bucketsTable(tablePrefix))(stateAt(tablePrefix)) { _ =>
     val (sh, post) = shAndPostings(docs, textCol, idCol, k)
     post
       .select("bb", "doc_id")
@@ -296,13 +209,13 @@ object NearDupIndex {
     // Tombstoned docs drop out at candidate time — before the shingle
     // joins, so a takedown also stops paying verification cost.
     val (sh, post) = shAndPostings(batch, textCol, idCol, k)
-    val cands = minusTombstones(spark, tablePrefix,
+    val cands = state(spark, tablePrefix).minusTombstones(spark,
       post
         .select(col("doc_id").as("doc_b"), col("bb"))
         .join(spark.table(bucketsTable(tablePrefix)), "bb")
         .select(col("doc_id").as("doc_a"), col("doc_b"))
         .distinct(),
-      on = "doc_a")
+      "doc_a")
     cands
       .join(spark.table(shinglesTable(tablePrefix))
         .select(col("doc_id").as("doc_a"), col("shh").as("ha")), "doc_a")
@@ -373,7 +286,8 @@ object NearDupIndex {
       threshold: Double = 0.9,
       textCol: String = "text",
       idCol: String = "doc_id",
-      k: Int = 3): DataFrame = withWriterLock(spark, null, tablePrefix) {
+      k: Int = 3): DataFrame =
+    IndexState.mutate(spark, null, bucketsTable(tablePrefix))(stateAt(tablePrefix)) { _ =>
     val novel = filterNovel(spark, tablePrefix, batch, threshold, textCol, idCol, k)
     val pairs = Dedup.nearDuplicatePairCounts(novel, threshold, textCol, idCol, k)
       .filter(col("n_inter") >= col("n_union") * threshold)
@@ -407,11 +321,11 @@ object NearDupIndex {
       tablePrefix: String,
       dir: String,
       otherPrefix: String,
-      maxBucket: Int = 64): Long = withWriterLock(spark, dir, tablePrefix) {
-    val post = minusTombstones(spark, tablePrefix,
-        spark.table(bucketsTable(tablePrefix)), on = "doc_id")
-      .unionByName(minusTombstones(spark, otherPrefix,
-        spark.table(bucketsTable(otherPrefix)), on = "doc_id"))
+      maxBucket: Int = 64): Long =
+    IndexState.mutate(spark, dir, bucketsTable(tablePrefix))(stateAt(tablePrefix)) { st =>
+    val other = state(spark, otherPrefix)
+    val post = st.minusTombstones(spark, spark.table(bucketsTable(tablePrefix)))
+      .unionByName(other.minusTombstones(spark, spark.table(bucketsTable(otherPrefix))))
       .distinct().localCheckpoint()
     def droppedOf(p: String): Option[DataFrame] =
       if (spark.catalog.tableExists(droppedTable(p))) Some(spark.table(droppedTable(p)))
@@ -428,12 +342,10 @@ object NearDupIndex {
     val freshDropped = sizes.filter(col("n_docs") > maxBucket)
     val droppedDf = carried.fold(freshDropped)(c =>
       c.unionByName(freshDropped).groupBy("bb").agg(max(col("n_docs")).as("n_docs")))
-    val shingles = minusTombstones(spark, tablePrefix,
-        spark.table(shinglesTable(tablePrefix)), on = "doc_id")
-      .unionByName(minusTombstones(spark, otherPrefix,
-        spark.table(shinglesTable(otherPrefix)), on = "doc_id"))
+    val shingles = st.minusTombstones(spark, spark.table(shinglesTable(tablePrefix)))
+      .unionByName(other.minusTombstones(spark, spark.table(shinglesTable(otherPrefix))))
       .groupBy("doc_id").agg(min(col("shh")).as("shh"))
-    val nb = tableBuckets(spark, bucketsTable(tablePrefix))
+    val nb = BucketedLayout.bucketCount(spark, bucketsTable(tablePrefix))
     val staged = Seq(
       BucketedLayout.stageBucketed(spark, kept,
         bucketsTable(tablePrefix), s"$dir/buckets", "bb", nb),
@@ -445,7 +357,7 @@ object NearDupIndex {
     val total = staged.map(BucketedLayout.swapInStaged(spark, _)).sum
     // This side's tombstones are physically retired by the rewrite;
     // the other shard's belong to it and are untouched.
-    clearTombstones(spark, tablePrefix, new org.apache.hadoop.fs.Path(dir))
+    st.clearTombstones(spark)
     total
   }
 
@@ -460,12 +372,12 @@ object NearDupIndex {
       spark: SparkSession,
       tablePrefix: String,
       dir: String,
-      maxBucket: Int = 64): Long = withWriterLock(spark, dir, tablePrefix) {
+      maxBucket: Int = 64): Long =
+    IndexState.mutate(spark, dir, bucketsTable(tablePrefix))(stateAt(tablePrefix)) { st =>
     // Tombstoned docs are dropped from BOTH tables before the rewrite
     // — physical retirement of takedowns rides the same pass as the
     // small-file collapse.
-    val post = minusTombstones(spark, tablePrefix,
-      spark.table(bucketsTable(tablePrefix)).distinct(), on = "doc_id")
+    val post = st.minusTombstones(spark, spark.table(bucketsTable(tablePrefix)).distinct())
       .localCheckpoint()
     val sizes = post.groupBy("bb").agg(count(lit(1)).as("n_docs")).localCheckpoint()
     val kept = post.join(
@@ -478,7 +390,7 @@ object NearDupIndex {
     // dropped bucket stays observable until the next full [[build]].
     // Pre-sidecar indexes (no dropped table yet) get one created, with
     // the INDEX's bucket count so both creation paths agree.
-    val nb = tableBuckets(spark, bucketsTable(tablePrefix))
+    val nb = BucketedLayout.bucketCount(spark, bucketsTable(tablePrefix))
     val freshDropped = sizes.filter(col("n_docs") > maxBucket)
     val droppedDf =
       if (spark.catalog.tableExists(droppedTable(tablePrefix)))
@@ -492,8 +404,7 @@ object NearDupIndex {
       BucketedLayout.stageBucketed(spark, kept,
         bucketsTable(tablePrefix), s"$dir/buckets", "bb", nb),
       BucketedLayout.stageBucketed(spark,
-        minusTombstones(spark, tablePrefix,
-          spark.table(shinglesTable(tablePrefix)), on = "doc_id")
+        st.minusTombstones(spark, spark.table(shinglesTable(tablePrefix)))
           .groupBy("doc_id").agg(min(col("shh")).as("shh")),
         shinglesTable(tablePrefix), s"$dir/shingles", "doc_id", nb),
       BucketedLayout.stageBucketed(spark, droppedDf,
@@ -501,15 +412,7 @@ object NearDupIndex {
     graft.sources.SwapHooks.preSwap(dir)
     val total = staged.map(BucketedLayout.swapInStaged(spark, _)).sum
     // Retired physically — clear, so the ids can be reused as new docs.
-    clearTombstones(spark, tablePrefix, new org.apache.hadoop.fs.Path(dir))
+    st.clearTombstones(spark)
     total
   }
-
-  private def tableBuckets(spark: SparkSession, table: String): Int =
-    spark.table(table).queryExecution.analyzed.collectFirst {
-      case r: org.apache.spark.sql.catalyst.catalog.HiveTableRelation =>
-        r.tableMeta.bucketSpec.map(_.numBuckets)
-      case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        r.catalogTable.flatMap(_.bucketSpec).map(_.numBuckets)
-    }.flatten.getOrElse(64)
 }

@@ -69,6 +69,18 @@ object BucketedLayout {
   def readBucketed(spark: SparkSession, table: String): DataFrame =
     spark.table(table)
 
+  /** The bucket count `table` is registered with (64 when the catalog
+    * entry carries no bucket spec) — what a rewrite of an existing
+    * bucketed index keeps.
+    */
+  def bucketCount(spark: SparkSession, table: String): Int =
+    spark.table(table).queryExecution.analyzed.collectFirst {
+      case r: org.apache.spark.sql.catalyst.catalog.HiveTableRelation =>
+        r.tableMeta.bucketSpec.map(_.numBuckets)
+      case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+        r.catalogTable.flatMap(_.bucketSpec).map(_.numBuckets)
+    }.flatten.getOrElse(64)
+
   /** Atomically install `staged` as `live`: live moves to `aside`,
     * staged renames in, aside drops. A reader sees the old complete
     * tree or the new complete tree; the only intermediate state is a
@@ -146,8 +158,7 @@ object BucketedLayout {
     spark.sql(s"DROP TABLE IF EXISTS ${st.tmpTable}") // metadata only; files stay staged
     swapDir(fs, st.tmp, live, new Path(st.path + ".__swap_old"))
     registerIfChanged(spark, st, fs, live)
-    fs.listStatus(live).count(s =>
-      s.isFile && !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
+    TinyParquet.dataFiles(spark.sparkContext.hadoopConfiguration, st.path).length.toLong
   }
 
   /** Stage + swap in one call — the single-table rebuild/compact path.
@@ -199,11 +210,9 @@ object BucketedLayout {
   def compact(spark: SparkSession, dir: String, targetBytes: Long = 128L << 20): Long = {
     require(targetBytes > 0, s"targetBytes > 0: $targetBytes")
     val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dataFiles = fs.listStatus(path).filter { st =>
-      st.isFile && !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith(".")
-    }
-    val totalBytes = dataFiles.map(_.getLen).sum
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = path.getFileSystem(conf)
+    val totalBytes = TinyParquet.dataBytes(conf, dir)
     val nFiles = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
 
     val tmp = new org.apache.hadoop.fs.Path(dir + ".__compact_tmp")
@@ -216,7 +225,6 @@ object BucketedLayout {
     // Swap: current -> old, tmp -> current, drop old. Readers see the
     // old complete directory or the new complete directory, never a mix.
     swapDir(fs, tmp, path, old)
-    fs.listStatus(path).count(st =>
-      st.isFile && !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith("."))
+    TinyParquet.dataFiles(conf, dir).length.toLong
   }
 }

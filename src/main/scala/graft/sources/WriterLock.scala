@@ -3,8 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Advisory single-writer guard for the persisted serving indexes
-  * ([[graft.ops.DedupIndex]], [[graft.ops.NearDupIndex]],
-  * [[graft.ops.AnnIndex]]) — the same protocol
+  * (taken through [[IndexState.withWriterLock]]) — the same protocol
   * [[graft.core.SummaryDB]] uses for its versioned swap.
   *
   * Why: each index's mutators are individually crash-safe, but they

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -22,8 +23,8 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * ONE data file; (2) installed by renaming that single file to the
   * DETERMINISTIC per-(batch, cell) name `b<batchId>.parquet`
   * (replacing any same-named leftover of a partial earlier attempt);
-  * and (3) sealed with a marker (`_stream_commits/<batchId>`); a
-  * re-delivered batchId with a marker present is skipped. One file
+  * and (3) sealed with a per-batch commit marker; a re-delivered
+  * batchId with a marker present is skipped. One file
   * per (batch, cell) makes the install ATOMIC PER CELL: a crash at
   * any point leaves a retry that replaces rather than duplicates, and
   * even a zombie driver racing a live one (both past the marker
@@ -50,7 +51,11 @@ object StreamingAnnIngest {
   }
 
   /** The guarded per-batch append the sink runs; returns true when the
-    * batch was appended, false when its marker showed it already was.
+    * batch was appended, false when its seal showed it already was.
+    * The commit protocol (seal check, writer lock — which also
+    * serializes the install against a concurrent compact — staging,
+    * seal) is [[graft.sources.IndexState.commitStreamBatch]]; this
+    * stages the batch and installs it.
     */
   private[graft] def appendBatch(
       indexDir: String,
@@ -59,38 +64,23 @@ object StreamingAnnIngest {
       idCol: String = "vec_id",
       vecCol: String = "embedding"): Boolean = {
     val spark = batch.sparkSession
-    val commits = new org.apache.hadoop.fs.Path(indexDir, "_stream_commits")
-    val marker = new org.apache.hadoop.fs.Path(commits, batchId.toString)
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(marker)) false
-    else graft.ops.AnnIndex.withWriterLock(spark, indexDir) {
-      // The lock serializes this install against a concurrent compact
-      // (which would silently drop files installed into a cell between
-      // its read and its directory swap) and against other batch
-      // mutators. A zombie attempt of THIS batch racing a live one now
-      // fails loudly on the lock instead of converging silently — the
-      // stream's retry redelivers and the deterministic names still
-      // replace, never duplicate.
+    val state = graft.ops.AnnIndex.state(indexDir)
+    state.commitStreamBatch(spark, batchId) { staging =>
       import spark.implicits._
       val books = graft.ops.AnnIndex.readCodebooks(spark, indexDir)
       val assigned0 = graft.ops.AnnIndex.assignCells(spark, indexDir, batch, idCol, vecCol)
       // With a PQ sidecar the batch feeds TWO staged writes — pin one
       // evaluation so vectors/ and pqcodes/ see identical rows.
       val assigned = if (books.isDefined) assigned0.localCheckpoint() else assigned0
-      // (1) stage under a per-attempt dir (UUID: a concurrent zombie
-      // attempt must not write into the same staging tree). The
-      // repartition by cell puts each cell's rows in exactly one task,
-      // so every cell directory stages exactly one data file — the
-      // unit the install step renames atomically.
-      val staging = new org.apache.hadoop.fs.Path(indexDir,
-        s"_stream_staging/$batchId-${java.util.UUID.randomUUID()}")
+      // (1) stage. The repartition by cell puts each cell's rows in
+      // exactly one task, so every cell directory stages exactly one
+      // data file — the unit the install step renames atomically.
       // maxRecordsPerFile is pinned OFF for the staged writes: a
       // session-level cap would split a hot cell's staged output into
-      // several files and break the one-file-per-cell invariant the
-      // atomic install depends on.
+      // several files and break the one-file-per-cell invariant.
       assigned.repartition(col("cell"))
         .write.mode("overwrite").option("maxRecordsPerFile", "0").partitionBy("cell")
-        .parquet(new org.apache.hadoop.fs.Path(staging, "vectors").toString)
+        .parquet(new Path(staging, "vectors").toString)
       books.foreach { bk =>
         // Frozen-codebook encode — the streaming twin of the batch
         // [[graft.ops.AnnIndex.append]] path: streamed vectors enter
@@ -105,64 +95,16 @@ object StreamingAnnIngest {
                   graft.functions.RefTable.bytes3(bk, 8)))).as("pq_codes"))): _*)
           .repartition(col("cell"))
           .write.mode("overwrite").option("maxRecordsPerFile", "0").partitionBy("cell")
-          .parquet(new org.apache.hadoop.fs.Path(staging, "pqcodes").toString)
+          .parquet(new Path(staging, "pqcodes").toString)
       }
-      // (2) install each staged cell file under its deterministic name
-      // — replacing, never duplicating or mixing with, what a partial
-      // earlier attempt left behind. A crash between the two installs
-      // leaves no marker, so the stream replays the batch and the
-      // redelivery re-installs BOTH trees.
-      installTree(fs, new org.apache.hadoop.fs.Path(staging, "vectors"),
-        new org.apache.hadoop.fs.Path(graft.ops.AnnIndex.vectorsPath(indexDir)), batchId)
+      // (2) install each staged cell file under its deterministic name.
+      // A crash between the two installs leaves no seal, so the stream
+      // replays the batch and the redelivery re-installs BOTH trees.
+      state.installPartitions(spark, new Path(staging, "vectors"),
+        new Path(graft.ops.AnnIndex.vectorsPath(indexDir)), "cell=", batchId)
       if (books.isDefined)
-        installTree(fs, new org.apache.hadoop.fs.Path(staging, "pqcodes"),
-          new org.apache.hadoop.fs.Path(graft.ops.AnnIndex.pqcodesPath(indexDir)), batchId)
-      fs.delete(staging, true)
-      // (3) seal: create-if-absent — losing the race to a concurrent
-      // identical attempt is fine, the file names are deterministic
-      fs.mkdirs(commits)
-      try {
-        val out = fs.create(marker, false)
-        out.close()
-      } catch { case _: java.io.IOException => () }
-      true
+        state.installPartitions(spark, new Path(staging, "pqcodes"),
+          new Path(graft.ops.AnnIndex.pqcodesPath(indexDir)), "cell=", batchId)
     }
-  }
-
-  /** Move every staged part file (exactly one per `cell=` directory by
-    * construction) to `<target>/cell=N/b<batchId>.parquet`. Sweeps any
-    * `b<batchId>-*` multi-file leftovers an older-format partial
-    * attempt may have installed, so upgrades converge too.
-    */
-  private def installTree(
-      fs: org.apache.hadoop.fs.FileSystem,
-      stagingRoot: org.apache.hadoop.fs.Path,
-      target: org.apache.hadoop.fs.Path,
-      batchId: Long): Unit = {
-    fs.listStatus(stagingRoot)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("cell="))
-      .foreach { cd =>
-        val cellDir = new org.apache.hadoop.fs.Path(target, cd.getPath.getName)
-        fs.mkdirs(cellDir)
-        val stale = fs.globStatus(
-          new org.apache.hadoop.fs.Path(cellDir, s"b$batchId-*.parquet"))
-        if (stale != null) stale.foreach(st => fs.delete(st.getPath, false))
-        val files = fs.listStatus(cd.getPath)
-          .filter { st =>
-            st.isFile && !st.getPath.getName.startsWith("_") &&
-              !st.getPath.getName.startsWith(".")
-          }
-        require(files.length == 1,
-          s"streaming ANN ingest: expected exactly one staged file in ${cd.getPath}, " +
-            s"got ${files.length} — the per-cell repartition invariant broke")
-        val installed = new org.apache.hadoop.fs.Path(cellDir, s"b$batchId.parquet")
-        fs.delete(installed, false)
-        if (!fs.rename(files.head.getPath, installed) && !fs.exists(installed))
-          // a concurrent identical attempt may have won the install race
-          // (its file holds the same rows); only a failure with NOTHING
-          // in place is a real error
-          throw new java.io.IOException(
-            s"streaming ANN ingest: could not install ${files.head.getPath} as $installed")
-      }
   }
 }

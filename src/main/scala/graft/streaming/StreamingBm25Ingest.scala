@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -23,12 +24,13 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * dfd repartitioned by `tb`; the stats delta is one row), (2)
   * installed by renaming each file to the DETERMINISTIC per-(batch,
   * bucket) name `b<batchId>.parquet` — replacing, never duplicating,
-  * what a partial earlier attempt left — and (3) sealed with a marker
-  * (`_stream_commits/<batchId>`); a redelivered batchId with a marker
-  * present is skipped. Install order is stats → dfd → postings, so a
-  * crash window never serves a document whose corpus weights are
-  * missing: postings land last, and stats/df present without postings
-  * only shifts idf/avgdl marginally until the redelivery converges.
+  * what a partial earlier attempt left — and (3) sealed with a per-batch
+  * commit marker ([[graft.sources.IndexState.commitStreamBatch]]); a
+  * redelivered batchId with a marker present is skipped. Install order
+  * is stats → dfd → postings, so a crash window never serves a
+  * document whose corpus weights are missing: postings land last, and
+  * stats/df present without postings only shifts idf/avgdl marginally
+  * until the redelivery converges.
   *
   * Doc ids must be new to the index ([[graft.ops.Bm25Index.append]]'s
   * contract). [[graft.ops.Bm25Index.compact]] refuses to run over an
@@ -53,6 +55,9 @@ object StreamingBm25Ingest {
 
   /** The guarded per-batch append the sink runs; returns true when the
     * batch was appended, false when its marker showed it already was.
+    * The commit protocol (marker check, writer lock, staging, seal) is
+    * [[graft.sources.IndexState.commitStreamBatch]]; this stages the
+    * batch's tables and installs them.
     */
   private[graft] def appendBatch(
       indexDir: String,
@@ -62,11 +67,8 @@ object StreamingBm25Ingest {
       idCol: String = "doc_id"): Boolean = {
     val spark = batch.sparkSession
     import spark.implicits._
-    val commits = new org.apache.hadoop.fs.Path(indexDir, "_stream_commits")
-    val marker = new org.apache.hadoop.fs.Path(commits, batchId.toString)
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(marker)) false
-    else graft.ops.Bm25Index.withWriterLock(spark, indexDir) {
+    val state = graft.ops.Bm25Index.state(indexDir)
+    state.commitStreamBatch(spark, batchId) { staging =>
       val nTb = graft.ops.Bm25Index.readNTb(spark, indexDir)
       graft.ops.Bm25Index.requireStatsHasTerms(spark, indexDir)
       // Metadata columns follow the index's schema (the batch must
@@ -77,15 +79,13 @@ object StreamingBm25Ingest {
       val posts = graft.ops.Bm25Index.postingsOf(batch, textCol, idCol, meta)
         .withColumn("tb", graft.ops.Bm25Index.tbOf(col("term"), nTb))
         .localCheckpoint()
-      val staging = new org.apache.hadoop.fs.Path(indexDir,
-        s"_stream_staging/$batchId-${java.util.UUID.randomUUID()}")
       // repartition by tb = exactly one staged file per touched bucket,
       // the unit the install step renames atomically. maxRecordsPerFile
       // pinned off: a session cap would split a hot bucket's file and
       // break the invariant.
       posts.repartition(col("tb")).sortWithinPartitions("tb", "term")
         .write.mode("overwrite").option("maxRecordsPerFile", "0").partitionBy("tb")
-        .parquet(new org.apache.hadoop.fs.Path(staging, "postings").toString)
+        .parquet(new Path(staging, "postings").toString)
       // Block-Max sidecar delta (skipped on pre-sidecar indexes — a
       // PARTIAL sidecar would under-bound the uncovered postings); the
       // dfd delta re-aggregates the sidecar rollup, so both cost one
@@ -95,11 +95,11 @@ object StreamingBm25Ingest {
       dfdDelta
         .repartition(col("tb"))
         .write.mode("overwrite").option("maxRecordsPerFile", "0").partitionBy("tb")
-        .parquet(new org.apache.hadoop.fs.Path(staging, "dfd").toString)
+        .parquet(new Path(staging, "dfd").toString)
       bmDelta.foreach(
         _.repartition(col("tb"))
           .write.mode("overwrite").option("maxRecordsPerFile", "0").partitionBy("tb")
-          .parquet(new org.apache.hadoop.fs.Path(staging, "blockmax").toString))
+          .parquet(new Path(staging, "blockmax").toString))
       // coalesce: an EMPTY micro-batch must stage a (0, 0, 0) delta,
       // not NPE on the null sum. n_terms is the batch's vocabulary
       // NOVELTY against the INSTALLED dfd (computed before any
@@ -119,78 +119,26 @@ object StreamingBm25Ingest {
       Seq((statRow._1, statRow._2, newTerms)).toDF("n_docs", "sum_dl", "n_terms")
         .repartition(1)
         .write.mode("overwrite").option("maxRecordsPerFile", "0")
-        .parquet(new org.apache.hadoop.fs.Path(staging, "stats").toString)
+        .parquet(new Path(staging, "stats").toString)
       // Install, stats -> dfd -> blockmax -> postings (docs become
       // retrievable only once fully weighted AND fully bounded — a
       // crash window must never serve postings whose block bounds are
       // missing, since an absent sidecar row reads as "term absent
       // from block" and would let the probe skip real docs), each file
       // under its deterministic name.
-      installFlat(fs, new org.apache.hadoop.fs.Path(staging, "stats"),
-        new org.apache.hadoop.fs.Path(graft.ops.Bm25Index.statsPath(indexDir)), batchId)
-      installTree(fs, new org.apache.hadoop.fs.Path(staging, "dfd"),
-        new org.apache.hadoop.fs.Path(graft.ops.Bm25Index.dfdPath(indexDir)), batchId)
+      state.installFile(spark, new Path(staging, "stats"),
+        new Path(graft.ops.Bm25Index.statsPath(indexDir)), batchId)
+      state.installPartitions(spark, new Path(staging, "dfd"),
+        new Path(graft.ops.Bm25Index.dfdPath(indexDir)), "tb=", batchId)
       if (nDblk.isDefined)
-        installTree(fs, new org.apache.hadoop.fs.Path(staging, "blockmax"),
-          new org.apache.hadoop.fs.Path(graft.ops.Bm25Index.blockmaxPath(indexDir)), batchId)
-      installTree(fs, new org.apache.hadoop.fs.Path(staging, "postings"),
-        new org.apache.hadoop.fs.Path(graft.ops.Bm25Index.postingsPath(indexDir)), batchId)
-      fs.delete(staging, true)
+        state.installPartitions(spark, new Path(staging, "blockmax"),
+          new Path(graft.ops.Bm25Index.blockmaxPath(indexDir)), "tb=", batchId)
+      state.installPartitions(spark, new Path(staging, "postings"),
+        new Path(graft.ops.Bm25Index.postingsPath(indexDir)), "tb=", batchId)
       graft.ops.Bm25Index.writeGenerationMarker(
-        fs, graft.ops.Bm25Index.generationMarkerPath(indexDir))
+        new Path(indexDir).getFileSystem(spark.sparkContext.hadoopConfiguration),
+        graft.ops.Bm25Index.generationMarkerPath(indexDir))
       graft.ops.Bm25Index.invalidateProbeCache(indexDir)
-      // Seal: create-if-absent — losing the race to a concurrent
-      // identical attempt is fine, the file names are deterministic.
-      fs.mkdirs(commits)
-      try {
-        val out = fs.create(marker, false)
-        out.close()
-      } catch { case _: java.io.IOException => () }
-      true
     }
-  }
-
-  /** Move every staged `tb=` part file (exactly one per bucket by
-    * construction) to `<target>/tb=N/b<batchId>.parquet`.
-    */
-  private def installTree(
-      fs: org.apache.hadoop.fs.FileSystem,
-      stagingRoot: org.apache.hadoop.fs.Path,
-      target: org.apache.hadoop.fs.Path,
-      batchId: Long): Unit =
-    fs.listStatus(stagingRoot)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("tb="))
-      .foreach { td =>
-        installOne(fs, td.getPath,
-          new org.apache.hadoop.fs.Path(target, td.getPath.getName), batchId)
-      }
-
-  /** Move the single staged part file of an unpartitioned table. */
-  private def installFlat(
-      fs: org.apache.hadoop.fs.FileSystem,
-      stagingDir: org.apache.hadoop.fs.Path,
-      target: org.apache.hadoop.fs.Path,
-      batchId: Long): Unit =
-    installOne(fs, stagingDir, target, batchId)
-
-  private def installOne(
-      fs: org.apache.hadoop.fs.FileSystem,
-      stagedDir: org.apache.hadoop.fs.Path,
-      targetDir: org.apache.hadoop.fs.Path,
-      batchId: Long): Unit = {
-    fs.mkdirs(targetDir)
-    val files = fs.listStatus(stagedDir)
-      .filter { st =>
-        st.isFile && !st.getPath.getName.startsWith("_") &&
-          !st.getPath.getName.startsWith(".")
-      }
-    require(files.length == 1,
-      s"streaming BM25 ingest: expected exactly one staged file in $stagedDir, " +
-        s"got ${files.length} — the per-bucket repartition invariant broke")
-    val installed = new org.apache.hadoop.fs.Path(targetDir, s"b$batchId.parquet")
-    fs.delete(installed, false)
-    if (!fs.rename(files.head.getPath, installed) && !fs.exists(installed))
-      throw new java.io.IOException(
-        s"streaming BM25 ingest: could not install ${files.head.getPath} as $installed")
   }
 }

@@ -70,7 +70,7 @@ object StreamingDedupIndex {
     // lock: a compact snapshotting the table between our filterNew and
     // our append would otherwise drop the appended hashes from its new
     // generation — silently un-seeing this batch forever.
-    graft.ops.DedupIndex.withWriterLock(spark, null, table) {
+    graft.sources.IndexState.mutate(spark, null, table)(graft.ops.DedupIndex.stateAt(table)) { _ =>
       // Evaluated once, BEFORE any append mutates what filterNew reads.
       val fresh = graft.ops.DedupIndex
         .filterNew(spark, table, batch, textCol, idCol)
@@ -78,7 +78,7 @@ object StreamingDedupIndex {
       if (!fs.exists(survivorsDone)) {
         fresh.drop("text_hash", "n_dups")
           .write.mode("overwrite").parquet(s"$survivorsDir/batch=$batchId")
-        markerCreate(fs, survivorsDone)
+        graft.sources.IndexState.seal(fs, survivorsDone)
       }
       fresh
         .select(
@@ -87,14 +87,8 @@ object StreamingDedupIndex {
           org.apache.spark.sql.functions.col(idCol).cast("long").as("keep_id"))
         .write.mode(org.apache.spark.sql.SaveMode.Append).format("parquet")
         .insertInto(table)
-      markerCreate(fs, hashesDone)
+      graft.sources.IndexState.seal(fs, hashesDone)
     }
     true
-  }
-
-  private def markerCreate(fs: org.apache.hadoop.fs.FileSystem, p: Path): Unit = {
-    fs.mkdirs(p.getParent)
-    try fs.create(p, false).close()
-    catch { case _: java.io.IOException => () } // lost a benign race
   }
 }

@@ -60,7 +60,9 @@ object StreamingNearDupIndex {
     // lock (reentrant — the append below takes it again): a compact
     // between our probe and our append would drop the appended
     // postings from its new generation.
-    graft.ops.NearDupIndex.withWriterLock(spark, null, tablePrefix) {
+    graft.sources.IndexState.mutate(spark, null,
+        graft.ops.NearDupIndex.bucketsTable(tablePrefix))(
+        graft.ops.NearDupIndex.stateAt(tablePrefix)) { _ =>
       // Survivors = novel vs the index AND keep-min within the batch —
       // the NearDupIndex.ingest selection, evaluated once BEFORE any
       // append mutates what the probe reads.
@@ -74,17 +76,11 @@ object StreamingNearDupIndex {
 
       if (!fs.exists(survivorsDone)) {
         kept.write.mode("overwrite").parquet(s"$survivorsDir/batch=$batchId")
-        markerCreate(fs, survivorsDone)
+        graft.sources.IndexState.seal(fs, survivorsDone)
       }
       graft.ops.NearDupIndex.append(spark, tablePrefix, kept, textCol, idCol)
-      markerCreate(fs, indexDone)
+      graft.sources.IndexState.seal(fs, indexDone)
     }
     true
-  }
-
-  private def markerCreate(fs: org.apache.hadoop.fs.FileSystem, p: Path): Unit = {
-    fs.mkdirs(p.getParent)
-    try fs.create(p, false).close()
-    catch { case _: java.io.IOException => () } // lost a benign race
   }
 }

@@ -34,4 +34,39 @@ class ClusteringSpec extends SparkSpec {
     // query, strictly less than brute force.
     assert(ivf.size <= exact.size)
   }
+
+  test("centroidRows: a frame with many more partitions than cores takes the shuffle path") {
+    // 64 range slices under local[4]: the driver combine would collect
+    // 64 partial sets, 16x what a core-count estimate budgets for
+    val pairs = spark.range(0L, 640L, 1L, 64)
+      .map(i => ((i % 8L).toInt, Seq.fill(4)(((i % 13L).toFloat - 6f) / 8f)))
+    assert(pairs.rdd.getNumPartitions == 64)
+    // 8 keys x 4 dims: 4 cores' partials fit this budget, 64 partitions' don't
+    val budget = 8L * (4L * 24L + 64L) * 16L
+    val sc = spark.sparkContext
+    val shuffleStages = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(
+          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten > 0L)
+          shuffleStages.incrementAndGet()
+    }
+    def rows(): Seq[(Int, Seq[Long], Seq[Long])] =
+      Clustering.centroidRows(pairs, Clustering.CentroidAgg, keys = 8L, dim = 4L)
+        .map { case (c, a) => (c, a.sums.toSeq, a.counts.toSeq) }.sortBy(_._1).toSeq
+    val old = Clustering.DriverCombineMaxBytes
+    try {
+      Clustering.DriverCombineMaxBytes = Long.MaxValue
+      val combined = rows()
+      Clustering.DriverCombineMaxBytes = budget
+      sc.addSparkListener(listener)
+      val shuffled = try {
+        val r = rows()
+        org.apache.spark.graftspec.ListenerBusDrain(sc)
+        r
+      } finally sc.removeSparkListener(listener)
+      assert(shuffleStages.get() > 0, "the budget must route 64 partitions to the shuffle path")
+      assert(shuffled == combined && combined.map(_._3.head).sum == 640L)
+    } finally Clustering.DriverCombineMaxBytes = old
+  }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.{AnnIndex, DedupIndex, NearDupIndex}
+import graft.ops.{AnnIndex, Bm25Index, DedupIndex, NearDupIndex}
 import graft.sources.SwapHooks
 import org.apache.spark.sql.functions._
 
@@ -79,6 +79,28 @@ class GenerationSwapSpec extends SparkSpec {
     var hooked = Option.empty[Set[Seq[Any]]]
     withHook { hooked = Some(probe()) } { AnnIndex.compact(spark, dir) }
     assert(hooked.contains(before), "mid-compact probe must serve the old tree")
+    assert(probe() == before, "compaction must not change probe results")
+  }
+
+  test("Bm25Index.compact: probe at SwapHooks.preSwap serves the OLD generation") {
+    val dir = tmpDir()
+    val words = Vector("alpha", "beta", "gamma", "delta", "epsilon", "zeta")
+    def docs(ids: Range) = ids.map { i =>
+      (i.toLong, (0 until 5).map(j => words((i * 3 + j * j) % words.length)).mkString(" "))
+    }.toDF("doc_id", "text")
+    Bm25Index.build(docs(0 until 60), dir, nTb = 4)
+    (0 until 3).foreach(b => Bm25Index.append(spark, dir, docs(1000 + b * 10 until 1010 + b * 10)))
+    val q = Seq((900L, "alpha delta"), (901L, "zeta beta")).toDF("query_id", "text")
+    def probe() = Bm25Index.topDocs(spark, dir, q, k = 4)
+      .select($"query_id", $"doc_id", $"rank", $"score_micro").collect().map(_.toSeq).toSet
+    def dataFiles() = Bm25Index.stats(spark, dir).dataFiles
+    val before = probe()
+    val filesBefore = dataFiles()
+    var hooked = Option.empty[(Set[Seq[Any]], Long)]
+    withHook { hooked = Some((probe(), dataFiles())) } { Bm25Index.compact(spark, dir) }
+    assert(hooked.contains((before, filesBefore)),
+      s"mid-compact probe must serve the old generation: $hooked vs ($before, $filesBefore)")
+    assert(dataFiles() < filesBefore, "the swap installs the compacted generation")
     assert(probe() == before, "compaction must not change probe results")
   }
 

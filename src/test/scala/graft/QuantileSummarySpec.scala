@@ -68,6 +68,26 @@ class QuantileSummarySpec extends SparkSpec {
     for (p <- Seq(0.1, 0.5, 0.9)) assert(r.quantile(p) == s.quantile(p))
   }
 
+  test("a stored weight-1 level over capacity loads into a sketch that still takes adds") {
+    // QSK1 bytes with k = 8 and 12 weight-1 values — more than a live
+    // sketch ever leaves uncompacted, but the format allows it
+    val vals = (1 to 12).map(_.toDouble * 3.0)
+    val buf = java.nio.ByteBuffer.allocate(4 + 4 + 8 + 8 + 4 + 8 + 1 + 4 + vals.length * 8)
+    buf.putInt(0x51534b31).putInt(8).putLong(vals.length.toLong).putLong(0L).putInt(1)
+    buf.putLong(1L).put(0.toByte).putInt(vals.length)
+    vals.foreach(buf.putDouble)
+    val s = QuantileSketch.fromBytes(buf.array())
+    assert(s.n == 12L && s.weighted.map(_._1).toSeq == vals)
+    s.add(100.0) // used to throw ArrayIndexOutOfBoundsException
+    assert(s.n == 13L && s.err > 0L, "the oversized level compacts on the next add")
+    assert(s.rankLe(1000.0) == 13L && s.weighted.map(_._1).contains(100.0))
+    val r = QuantileSketch.fromBytes(QuantileSketch.toBytes(s))
+    assert(r.k == 8 && r.n == s.n && r.err == s.err && r.weighted.toSeq == s.weighted.toSeq)
+    assert(QuantileSketch.toBytes(r).sameElements(QuantileSketch.toBytes(s)))
+    (1 to 50).foreach(i => r.add(i.toDouble))
+    assert(r.n == 63L && r.quantile(0.5) > 0.0)
+  }
+
   // ---- Windowed summaries on Spark ----
 
   test("windows follow the canonical partition; union answers exact quantiles at tiny n") {
